@@ -3,11 +3,10 @@ package graft.engine
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.functions.XXHash64
 import graft.geom.{Zone, ZoneIndex}
-import graft.operators.{ZonalEngine, ZonalStats}
+import graft.operators.{FidPartial, Hist, Values, ZonalEngine, ZonalStats}
 import graft.sources.{TileFileStat, TileManifest, TileTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -22,7 +21,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * round-trips, so files are grouped into at most `maxChunks` jobs,
   * each wide enough to saturate cluster parallelism while keeping
   * checkpoint granularity. Each chunk writes its per-FID partial stats
-  * to `<ckptDir>/chunk=<i>/` together with a `lineage.json` recording
+  * (and, for exact percentiles, their [[graft.operators.RadixSelect]]
+  * bucket counts) to `<ckptDir>/chunk=<i>/stats.json`; the second
+  * percentile pass writes `<ckptDir>/pass2/chunk=<i>/stats.json`. Each
+  * chunk directory also holds a `lineage.json` recording
   * the chunk's file list, input fingerprint, per-partition row/pixel
   * counts and wall time. A restarted run skips every chunk whose
   * lineage exists AND whose fingerprint matches the current inputs
@@ -30,8 +32,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * is recomputed instead of silently merged. The final merge is a pure
   * reduction over chunk outputs in a fixed order, so interrupted runs
   * resume to byte-identical results. The kernel (decode + scanline
-  * assign) runs exactly once per chunk — see [[chunkedFidStats]] for
-  * the one-job-per-chunk layout.
+  * assign) runs exactly once per chunk and pass — see
+  * [[chunkedFidStats]] for the one-job-per-chunk layout.
   */
 object Checkpoints {
   private val mapper = new ObjectMapper()
@@ -54,6 +56,15 @@ object Checkpoints {
 
   def chunkDir(ckptDir: String, i: Int): String = f"$ckptDir/chunk=$i%05d"
 
+  /** Checkpoint root of the second exact-percentile pass; its chunks
+    * are `chunkDir(pass2Dir(ckptDir), i)`. */
+  def pass2Dir(ckptDir: String): String = s"$ckptDir/pass2"
+
+  /** Chunk-output format, mixed into [[contextDigest]]: a checkpoint
+    * dir written by an older format (format 1 persisted raw `partials`
+    * parquet with pixel values) never matches and is recomputed. */
+  val Format = 2
+
   /** Group the manifest's cell-sorted files into at most `maxChunks`
     * contiguous chunks (spatially coherent because files are
     * cell-range sorted). */
@@ -69,7 +80,8 @@ object Checkpoints {
 
   /** Digest of the CHUNK-INVARIANT inputs: the simplified zone set
     * (fid, group, geometry WKB), the table's grid geo-referencing,
-    * nodata, SRS and band metadata, and the collectValues flag.
+    * nodata, SRS and band metadata, the collectValues flag and the
+    * chunk-output `format` (format 1 = the legacy digest).
     * Computed once per run (the zone hash is O(zones) — doing it per
     * chunk would rebuild a multi-MB buffer chunks× times on the
     * driver); per-chunk fingerprints mix in only the file stats.
@@ -80,7 +92,7 @@ object Checkpoints {
     * (byte-identical regeneration is the one remaining blind spot —
     * and is also harmless). */
   def contextDigest(zones: Seq[Zone], manifest: TileManifest,
-      collectValues: Boolean): String = {
+      collectValues: Boolean, format: Int = Format): String = {
     val sb = new StringBuilder
     zones.foreach { z =>
       sb.append(z.fid).append('|').append(z.group).append('|')
@@ -97,6 +109,7 @@ object Checkpoints {
     if (manifest.deletes.nonEmpty)
       sb.append('|').append(manifest.deletes
         .map(d => s"${d.path}:${d.nKeys}").mkString(","))
+    if (format > 1) sb.append("|format=").append(format)
     f"${XXHash64.hashString(sb.toString, 42L)}%016x"
   }
 
@@ -135,25 +148,23 @@ object Checkpoints {
 
   /** Run the per-FID partial-stats stage chunk by chunk with
     * checkpointing; returns the merged fid-level stats DataFrame
-    * (same shape as ZonalStats.fidStats), the percentile value-chunk
-    * frame (fid, vals) when `collectValues`, and the number of chunks
-    * actually (re)computed this run.
+    * (same shape as ZonalStats.fidStats), the pass-1 coarse
+    * histograms per fid when `collectValues` (the first
+    * [[graft.operators.RadixSelect]] pass of exact percentiles), and
+    * the number of chunks actually (re)computed this run.
     *
-    * Chunk outputs are PRE-AGGREGATED per FID: chunk outputs only
-    * ever merge through an algebraic (sum/min/max) reduction, so a
-    * chunk persists zone-cardinality rows, not per-(tile,fid)
-    * partials. The non-percentile path goes further: ONE Spark job
-    * per chunk (per-partition pre-agg collected to the driver) and a
-    * driver-side atomic `stats.json` — no cache, no second pass over
-    * the kernel output, no per-chunk parquet commit protocol — so
-    * resumability costs only the chunking itself and the path tracks
-    * the direct run's wall clock. Raw partials (with `vals`) are
-    * written as parquet only when the exact-percentile path needs the
-    * value chunks. Merge order is fixed (partition, fid, chunk), so
-    * resumed and fresh runs are float64-bit-identical. Driver memory
-    * for the merge is O(chunks × zones) — bounded by the same
-    * zones-are-broadcastable assumption the whole engine (and the
-    * reference) makes.
+    * Chunk outputs are PRE-AGGREGATED per FID: ONE Spark job per
+    * chunk folds the kernel's partials per FID inside each task (no
+    * shuffle), the driver merges the tasks' results in partition
+    * order and writes an atomic `stats.json` — no cache, no second
+    * pass over the kernel output, no per-chunk parquet commit
+    * protocol, and no pixel values on disk — so resumability costs
+    * only the chunking itself and the path tracks the direct run's
+    * wall clock. Histograms add O(zones × buckets) per chunk. Merge
+    * order is fixed (partition, fid, chunk), so resumed and fresh
+    * runs are float64-bit-identical. Driver memory for the merge is
+    * O(chunks × zones) — bounded by the same zones-are-broadcastable
+    * assumption the whole engine (and the reference) makes.
     *
     * @param filesOverride restrict the run to these manifest files
     *   (e.g. [[graft.sources.TileTable.prunedFiles]] of the zones'
@@ -170,166 +181,132 @@ object Checkpoints {
       lastWins: Boolean = false,
       filesOverride: Option[Seq[TileFileStat]] = None,
       band: Option[Int] = None)
-      : (DataFrame, Option[DataFrame], Int) = {
+      : (DataFrame, Option[Map[Long, Hist]], Int) = {
+    val run = new ChunkedRun(spark, table, zones, ckptDir, runId,
+      collectValues, maxChunks, lastWins, filesOverride, band)
+    try {
+      val (merged, computed) = run.pass1()
+      (fidStatsFrame(spark, merged),
+        if (collectValues) Some(merged.map(p => p.fid -> p.hist).toMap)
+        else None,
+        computed)
+    } finally run.close()
+  }
+
+  private def fidStatsFrame(spark: SparkSession,
+      ps: Seq[FidPartial]): DataFrame =
+    ZonalStats.fidStatsFrame(spark, ps.map(p => ZonalStats.FidStatRow(
+      p.fid, p.cnt, p.nodata, p.mn, p.mx, p.sum, p.sumsq)))
+
+  /** The chunked kernel passes of one resumable run: the zone index
+    * broadcast, the chunk list and the context digest are shared by
+    * pass 1 (stats, plus bucket counts for exact percentiles) and the
+    * exact-percentile pass 2; [[close]] releases the broadcast. */
+  private final class ChunkedRun(spark: SparkSession, table: TileTable,
+      zones: Seq[Zone], ckptDir: String, runId: String,
+      collectValues: Boolean, maxChunks: Int, lastWins: Boolean,
+      filesOverride: Option[Seq[TileFileStat]], band: Option[Int]) {
     require(table.manifest.bands.isEmpty || band.isDefined,
       s"${table.root} is multi-band: pass the band to address")
-    val idx = new ZoneIndex(zones.toArray)
-    val bc = spark.sparkContext.broadcast(idx)
-    val grid = table.grid
-    val nodata = table.nodataFor(band)
-    val chunks = chunkFiles(filesOverride.getOrElse(table.manifest.files),
-      maxChunks)
-    val ctx = contextDigest(zones, table.manifest, collectValues) +
+    private val bc = spark.sparkContext.broadcast(
+      new ZoneIndex(zones.toArray))
+    private val grid = table.grid
+    private val nodata = table.nodataFor(band)
+    private val chunks = chunkFiles(
+      filesOverride.getOrElse(table.manifest.files), maxChunks)
+    private val ctx = contextDigest(zones, table.manifest, collectValues) +
       (if (lastWins) "|lastWins" else "") +
       band.map(b => s"|band=$b").getOrElse("")
-    val computed = new java.util.concurrent.atomic.AtomicInteger(0)
 
-    // Chunks are independent Spark jobs; submitting them from a
-    // bounded pool keeps several in flight so per-job fixed costs
-    // (scheduling, parquet commit) overlap with other chunks' compute
-    // instead of serializing the cluster behind the driver loop.
-    val concurrency = math.min(math.max(1, chunks.size), math.max(1,
-      sys.env.getOrElse("GRAFT_CKPT_CONCURRENCY", "12").toInt))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
+    def pass1(): (Seq[FidPartial], Int) =
+      pass(ckptDir, ctx,
+        if (collectValues) Values.Coarse else Values.Off)
 
-    def runChunk(files: Seq[TileFileStat], i: Int): Unit = {
-      val fp = fingerprint(ctx, files, table.root)
-      if (!isChunkDone(ckptDir, i, fp)) {
-        val t0 = System.nanoTime()
-        val dir = chunkDir(ckptDir, i)
-        // tombstones apply per raw file-group scan — the chunked path
-        // bypasses table.read(), so it must fold the deletes itself;
-        // scanRaw also pins the TABLE schema (evolution defaults, no
-        // per-file footer inference)
-        val raw = table.applyDeletes(spark,
-          table.scanRaw(spark, files.map(_.path)))
-        val tiles = band.map(b => raw.where(col("band") === b))
-          .getOrElse(raw)
-        if (collectValues) {
-          // percentile (parity-mode) runs need the raw value chunks:
-          // cache the partials, derive metrics + the parquet write
-          // from ONE kernel pass
-          val partials = ZonalStats.tilePartials(tiles, bc, grid, nodata,
-            collectValues = true, lastWins)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val metrics = partials
-              .groupBy(spark_partition_id().as("partition"))
-              .agg(count(lit(1)).as("partial_rows"),
-                sum("cnt").as("pixels"))
-              .collect()
-            partials.write.mode("overwrite").parquet(s"$dir/partials")
-            writeLineage(dir, i, files, fp, runId,
-              (System.nanoTime() - t0) / 1e6,
-              metrics.map(r => (r.getInt(0), r.getLong(1),
-                if (r.isNullAt(2)) 0L else r.getLong(2))))
-          } finally partials.unpersist()
-        } else {
-          // ONE Spark job per chunk: per-(partition, fid) pre-agg
-          // collected to the driver (zone-cardinality × scan-partition
-          // rows — a few KB), then a driver-side atomic stats file.
-          // No cache, no second pass, no per-chunk parquet commit
-          // protocol — the chunk's cost is the kernel, full stop.
-          // The (partition, fid) ordering fixes the float64 merge
-          // order, so resumed and fresh runs are bit-identical.
-          val rows = ZonalStats.tilePartials(tiles, bc, grid, nodata,
-              collectValues = false, lastWins)
-            .toDF()
-            .withColumn("_part", spark_partition_id())
-            .groupBy("_part", "fid")
-            .agg(count(lit(1)).as("nrows"), sum("cnt").as("cnt"),
-              sum("nodata").as("nodata"), min("mn").as("mn"),
-              max("mx").as("mx"), sum("sum").as("sum"),
-              sum("sumsq").as("sumsq"))
-            .collect()
-            .sortBy(r => (r.getInt(0), r.getLong(1)))
-          val metrics = rows.groupBy(_.getInt(0)).toSeq.map {
-            case (part, rs) =>
-              (part, rs.map(_.getLong(2)).sum, rs.map(_.getLong(3)).sum)
-          }.toArray
-          val byFid = scala.collection.mutable.LinkedHashMap
-            .empty[Long, ChunkFidStat]
-          rows.foreach { r =>
-            val fid = r.getLong(1)
-            val s = byFid.getOrElseUpdate(fid,
-              ChunkFidStat(fid, 0L, 0L, Double.PositiveInfinity,
-                Double.NegativeInfinity, 0.0, 0.0))
-            byFid(fid) = ChunkFidStat(fid,
-              s.cnt + r.getLong(3), s.nodata + r.getLong(4),
-              math.min(s.mn, r.getDouble(5)), math.max(s.mx, r.getDouble(6)),
-              s.sum + r.getDouble(7), s.sumsq + r.getDouble(8))
-          }
-          writeChunkStats(dir, byFid.values.toSeq.sortBy(_.fid))
+    /** Pass 2 of exact percentiles: its fingerprint covers the target
+      * buckets, so a pass-2 chunk is reused only for the same targets. */
+    def pass2(fine: Values.Fine): Seq[(Long, Hist)] = {
+      val t = new StringBuilder
+      fine.targets.value.toSeq.sortBy(_._1).foreach { case (fid, bs) =>
+        t.append(fid).append(':').append(bs.mkString(",")).append('|')
+      }
+      val digest = f"${XXHash64.hashString(t.toString, 42L)}%016x"
+      pass(pass2Dir(ckptDir), s"$ctx|pass2=$digest", fine)._1
+        .map(p => p.fid -> p.hist)
+    }
+
+    def close(): Unit = bc.destroy()
+
+    /** Run the chunks of one pass whose checkpoint is missing or stale,
+      * then merge every chunk's output in chunk order. */
+    private def pass(root: String, passCtx: String,
+        values: Values): (Seq[FidPartial], Int) = {
+      val computed = new java.util.concurrent.atomic.AtomicInteger(0)
+      val kernel = ZonalStats.fidKernel(bc, grid, nodata, lastWins, values)
+
+      def runChunk(files: Seq[TileFileStat], i: Int): Unit = {
+        val fp = fingerprint(passCtx, files, table.root)
+        if (!isChunkDone(root, i, fp)) {
+          val t0 = System.nanoTime()
+          val dir = chunkDir(root, i)
+          // a stale chunk dir (other inputs, older format) is cleared,
+          // never merged
+          deleteRecursively(Paths.get(dir))
+          // tombstones apply per raw file-group scan — the chunked path
+          // bypasses table.read(), so it must fold the deletes itself;
+          // scanRaw also pins the TABLE schema (evolution defaults, no
+          // per-file footer inference)
+          val raw = table.applyDeletes(spark,
+            table.scanRaw(spark, files.map(_.path)))
+          val tiles = band.map(b => raw.where(col("band") === b))
+            .getOrElse(raw)
+          val parts = ZonalStats.foldTiles(tiles, kernel)
+          val merged = ZonalStats.mergeFolded(parts.iterator.flatMap(_._2))
+            .map(_._2)
+          writeChunkStats(dir, merged.sortBy(_.fid))
           writeLineage(dir, i, files, fp, runId,
-            (System.nanoTime() - t0) / 1e6, metrics)
-        }
-        computed.incrementAndGet()
-      }
-    }
-
-    val progress = Progress.attach(spark, s"$ckptDir/progress.jsonl")
-    try {
-      val futures = chunks.zipWithIndex.map { case (files, i) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = runChunk(files, i)
-        })
-      }
-      futures.foreach(_.get()) // propagate the first failure
-    } finally {
-      pool.shutdownNow()
-      Progress.detach(spark, progress)
-      // chunk outputs live on disk (stats.json / parquet) — nothing
-      // returned below references the zone broadcast, so drop it now
-      // rather than waiting on the ContextCleaner
-      bc.destroy()
-    }
-
-    import spark.implicits._
-    if (chunks.isEmpty) {
-      // nothing to scan (fully pruned table): empty fid-stats frame
-      val empty = Seq.empty[(Long, Long, Long, Double, Double, Double,
-        Double)].toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-      return (empty, None, 0)
-    }
-    if (collectValues) {
-      val all = spark.read.parquet(
-        chunks.indices.map(i => s"${chunkDir(ckptDir, i)}/partials"): _*)
-      val vals = Some(all.select(col("fid"), col("vals"))
-        .where(size(col("vals")) > 0))
-      (ZonalStats.fidStats(all.drop("vals")), vals, computed.get())
-    } else {
-      // cross-chunk merge is a driver-side fold over the chunk stats
-      // files in chunk order (zone-cardinality rows per chunk) —
-      // deterministic float64 order, no Spark job at all
-      val byFid = scala.collection.mutable.LinkedHashMap
-        .empty[Long, ChunkFidStat]
-      chunks.indices.foreach { i =>
-        readChunkStats(chunkDir(ckptDir, i)).foreach { s =>
-          val m = byFid.get(s.fid)
-          byFid(s.fid) = m match {
-            case None => s
-            case Some(p) => ChunkFidStat(s.fid, p.cnt + s.cnt,
-              p.nodata + s.nodata, math.min(p.mn, s.mn),
-              math.max(p.mx, s.mx), p.sum + s.sum, p.sumsq + s.sumsq)
-          }
+            (System.nanoTime() - t0) / 1e6,
+            parts.zipWithIndex.map { case ((rows, ps), part) =>
+              (part, rows, ps.map(_._2.cnt).sum)
+            })
+          computed.incrementAndGet()
         }
       }
-      val merged = byFid.values.toSeq.sortBy(_.fid)
-        .map(s => (s.fid, s.cnt, s.nodata, s.mn, s.mx, s.sum, s.sumsq))
-        .toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-      (merged, None, computed.get())
+
+      // Chunks are independent Spark jobs; submitting them from a
+      // bounded pool keeps several in flight so per-job fixed costs
+      // (scheduling, result collection) overlap with other chunks'
+      // compute instead of serializing the cluster behind the driver
+      // loop.
+      val concurrency = math.min(math.max(1, chunks.size), math.max(1,
+        sys.env.getOrElse("GRAFT_CKPT_CONCURRENCY", "12").toInt))
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(concurrency)
+      val progress = Progress.attach(spark, s"$ckptDir/progress.jsonl")
+      try {
+        val futures = chunks.zipWithIndex.map { case (files, i) =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            override def call(): Unit = runChunk(files, i)
+          })
+        }
+        futures.foreach(_.get()) // propagate the first failure
+      } finally {
+        pool.shutdownNow()
+        Progress.detach(spark, progress)
+      }
+      // cross-chunk merge: a driver-side fold over the chunk stats
+      // files in chunk order — deterministic float64 order, no Spark
+      // job at all
+      val merged = ZonalStats.mergeFolded(chunks.indices.iterator.flatMap(
+        i => readChunkStats(chunkDir(root, i)).map(p => p.fid -> p)))
+      (merged.map(_._2).sortBy(_.fid), computed.get())
     }
   }
 
-  /** One chunk's per-FID algebraic stats. */
-  final case class ChunkFidStat(fid: Long, cnt: Long, nodata: Long,
-      mn: Double, mx: Double, sum: Double, sumsq: Double)
-
   /** Chunk stats sidecar (stats.json, written atomically BEFORE
     * lineage.json): doubles stored as raw IEEE-754 bits so ±Infinity
-    * sentinels and exact values survive the JSON round-trip. */
-  private def writeChunkStats(dir: String,
-      stats: Seq[ChunkFidStat]): Unit = {
+    * sentinels and exact values survive the JSON round-trip; a
+    * non-empty histogram as parallel `keys`/`counts` arrays. */
+  private def writeChunkStats(dir: String, stats: Seq[FidPartial]): Unit = {
     val o = mapper.createArrayNode()
     stats.foreach { s =>
       val n = o.addObject()
@@ -338,6 +315,10 @@ object Checkpoints {
       n.put("mx", java.lang.Double.doubleToRawLongBits(s.mx))
       n.put("sum", java.lang.Double.doubleToRawLongBits(s.sum))
       n.put("sumsq", java.lang.Double.doubleToRawLongBits(s.sumsq))
+      if (!s.hist.isEmpty) {
+        val ks = n.putArray("keys"); s.hist.keys.foreach(k => ks.add(k))
+        val cs = n.putArray("counts"); s.hist.counts.foreach(c => cs.add(c))
+      }
     }
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(dir, ".stats.json.tmp")
@@ -346,17 +327,23 @@ object Checkpoints {
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def readChunkStats(dir: String): Seq[ChunkFidStat] = {
+  private def readChunkStats(dir: String): Seq[FidPartial] = {
     val p = Paths.get(dir, "stats.json")
     val arr = mapper.readTree(Files.readString(p))
-    val out = scala.collection.mutable.ArrayBuffer.empty[ChunkFidStat]
+    val out = scala.collection.mutable.ArrayBuffer.empty[FidPartial]
     arr.forEach { n =>
-      out += ChunkFidStat(n.get("fid").asLong(), n.get("cnt").asLong(),
+      val hist = Option(n.get("keys")).fold(Hist.Empty) { ks =>
+        val cs = n.get("counts")
+        Hist(Array.tabulate(ks.size)(ks.get(_).asInt()),
+          Array.tabulate(cs.size)(cs.get(_).asLong()))
+      }
+      out += FidPartial(n.get("fid").asLong(), n.get("cnt").asLong(),
         n.get("nodata").asLong(),
         java.lang.Double.longBitsToDouble(n.get("mn").asLong()),
         java.lang.Double.longBitsToDouble(n.get("mx").asLong()),
         java.lang.Double.longBitsToDouble(n.get("sum").asLong()),
-        java.lang.Double.longBitsToDouble(n.get("sumsq").asLong()))
+        java.lang.Double.longBitsToDouble(n.get("sumsq").asLong()),
+        Array.emptyFloatArray, hist)
     }
     out.toSeq
   }
@@ -365,7 +352,9 @@ object Checkpoints {
     * engine tail (fallback pass, rollup, exact percentiles,
     * zero-fill) — output-identical to [[ZonalEngine.run]] on the same
     * inputs, including `lastWins` (the INI job path's semantics) and
-    * percentiles.
+    * exact percentiles. Percentiles run both
+    * [[graft.operators.RadixSelect]] passes chunked and checkpointed:
+    * pass 1 with the stats, pass 2 under `pass2Dir(ckptDir)`.
     *
     * @param keepCheckpoints false = the reference's
     *   `clean_working_dir=True` (`runner.py:921-923`): materialize the
@@ -381,7 +370,6 @@ object Checkpoints {
       lastWins: Boolean = false,
       maxChunks: Int = DefaultMaxChunks,
       keepCheckpoints: Boolean = true,
-      exactPercentiles: Boolean = true,
       band: Option[Int] = None,
       fidStatsSink: Option[DataFrame => Unit] = None): DataFrame = {
     import spark.implicits._
@@ -391,17 +379,23 @@ object Checkpoints {
     // prune the chunk list to the zones' envelope — a job over a
     // region touches only that region's files, like the direct path
     val env = Zone.totalEnvelope(zonesSimpl)
-    val (fidStats, vals, _) = chunkedFidStats(spark, table, zonesSimpl,
-      ckptDir, runId, collectValues = percs.nonEmpty,
-      maxChunks = maxChunks, lastWins = lastWins,
-      filesOverride = Some(table.prunedFiles(env)), band = band)
-    val zonesDf = zonesSimpl.map(z => (z.fid, Option(z.group)))
-      .toDF("fid", "group")
-    fidStatsSink.foreach(_(fidStats))
-    val res = ZonalEngine.finishStats(spark, fidStats, vals, zonesSimpl,
-      zonesDf, table.grid, table.nodataFor(band), percs, exactPercentiles,
-      e => table.readPruned(spark, e, band), histogram = None,
-      tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
+    val run = new ChunkedRun(spark, table, zonesSimpl, ckptDir, runId,
+      collectValues = percs.nonEmpty, maxChunks, lastWins,
+      Some(table.prunedFiles(env)), band)
+    val res = try {
+      val (pass1, _) = run.pass1()
+      val fidStats = fidStatsFrame(spark, pass1)
+      val zonesDf = zonesSimpl.map(z => (z.fid, Option(z.group)))
+        .toDF("fid", "group")
+      fidStatsSink.foreach(_(fidStats))
+      ZonalEngine.finishStats(spark, fidStats,
+        if (percs.isEmpty) None
+        else Some(ZonalEngine.ExactPasses(
+          pass1.map(p => p.fid -> p.hist), run.pass2)),
+        zonesSimpl, zonesDf, table.grid, table.nodataFor(band), percs,
+        e => table.readPruned(spark, e, band), histogram = None,
+        tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty))
+    } finally run.close()
     if (keepCheckpoints) res
     else {
       // finishStats returns a MATERIALIZED local frame, so the scratch

@@ -1,7 +1,8 @@
 package graft.engine
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.{FileVisitOption, FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
 import scala.jdk.CollectionConverters._
 
 /** INI job configuration — parse + eager validation mirroring
@@ -175,26 +176,41 @@ object Config {
   }
 
   /** `Path(".").glob(pattern)` analogue for tile-table roots, extended
-    * to accept absolute patterns (walked from the deepest non-glob
-    * prefix directory). */
-  private def glob(pattern: String): Seq[String] = {
+    * to accept absolute patterns. A pattern without a glob character
+    * names one path: itself, if it exists. A globbed pattern is walked
+    * from its deepest fixed prefix directory, no deeper than its
+    * segments reach (8 levels for `**`); unreadable directories are
+    * skipped. */
+  private[engine] def glob(pattern: String): Seq[String] = {
     val norm = pattern.stripPrefix("./")
     val segs = norm.split('/')
     val firstGlob = segs.indexWhere(s => s.exists("*?[{".contains(_)))
-    val (baseStr, isAbs) =
-      if (norm.startsWith("/")) {
-        val fixed = segs.take(math.max(firstGlob, 1)).mkString("/")
-        (if (fixed.isEmpty) "/" else fixed, true)
-      } else (".", false)
-    val base = Paths.get(baseStr)
-    if (!Files.exists(base)) return Nil
+    if (firstGlob < 0)
+      return if (Files.exists(Paths.get(norm))) Seq(norm) else Nil
+    val fixed = segs.take(firstGlob).mkString("/")
+    val base = Paths.get(
+      if (fixed.nonEmpty) fixed else if (norm.startsWith("/")) "/" else ".")
+    if (!Files.isDirectory(base)) return Nil
+    val depth = if (norm.contains("**")) 8 else segs.length - firstGlob
     val matcher = java.nio.file.FileSystems.getDefault
       .getPathMatcher("glob:" + norm)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    Files.walk(base, 8).iterator().asScala.foreach { p =>
-      val cand = if (isAbs) p else base.relativize(p)
+    def visit(p: Path): FileVisitResult = {
+      // walking "." yields "./x": match the pattern's own form "x"
+      val cand = if (fixed.isEmpty && !norm.startsWith("/"))
+        base.relativize(p) else p
       if (matcher.matches(cand)) out += cand.toString
+      FileVisitResult.CONTINUE
     }
+    Files.walkFileTree(base, java.util.EnumSet.noneOf(
+      classOf[FileVisitOption]), depth, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path,
+          a: BasicFileAttributes): FileVisitResult = visit(d)
+      override def visitFile(f: Path,
+          a: BasicFileAttributes): FileVisitResult = visit(f)
+      override def visitFileFailed(f: Path,
+          e: java.io.IOException): FileVisitResult = FileVisitResult.CONTINUE
+    })
     out.toSeq.sorted
   }
 }

@@ -6,10 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Per-(tile, fid, part) partial over an envelope-fallback window. */
-final case class WinPartial(fid: Long, part: Int, cnt: Long, nodata: Long,
-    mn: Double, mx: Double, sum: Double, sumsq: Double, vals: Array[Float])
-
 /** End-to-end zonal statistics over a tile table — the Spark-native
   * `fast_zonal_statistics` (`/root/reference/runner.py:264-926`).
   *
@@ -43,11 +39,12 @@ object ZonalEngine {
     ps.distinct.sorted
 
   /** Tile-count threshold for the SCALE-AWARE percentile default: at
-    * 128² px/tile this is ~68 Gpx — beyond it, concentrating a
-    * group's raw values on one reducer (the exact numpy-parity path)
-    * stops being a sane default and the mergeable Greenwald-Khanna
-    * sketch takes over. Callers needing bit-parity at any size pass
-    * an explicit override. */
+    * 128² px/tile this is ~68 Gpx — beyond it the mergeable
+    * Greenwald-Khanna sketch takes over from the exact numpy-parity
+    * path. The exact path no longer concentrates values anywhere (its
+    * two [[RadixSelect]] passes ship O(groups × buckets) counts), but
+    * it decodes the table twice; callers needing bit-parity at any
+    * size pass an explicit override. */
   val ExactPercentileMaxTiles: Long = 4L * 1024 * 1024
 
   /** true = exact percentiles. Auto mode (None override): exact while
@@ -110,9 +107,10 @@ object ZonalEngine {
     * full recompute at the head — which is exactly what the driver
     * oracle pins (q_zonal_incremental).
     *
-    * Percentiles need raw value chunks, which saved algebraic stats
-    * cannot reconstruct — deliberately not offered here; run the
-    * sketch path over the full table when quantiles are required.
+    * Percentiles need a sweep over the pixel values (the second
+    * [[RadixSelect]] pass targets buckets of the WHOLE table's counts),
+    * which saved algebraic stats cannot replace — deliberately not
+    * offered here; run the full-table path when quantiles are required.
     *
     * `lastWins` is safe to fold additively: last-burn-wins changes
     * which ZONE a pixel is assigned to, but that assignment is a
@@ -225,7 +223,7 @@ object ZonalEngine {
         ZonalStats.groupStatsLocalFrame(spark, afterRemovals,
           zones.map(z => (z.fid, Option(z.group))))
       else finishStats(spark, merged, None, zones, zonesDf, grid,
-        nodata, percentiles = Nil, exactPercentiles = true,
+        nodata, percentiles = Nil,
         tilesFor = e => table.readPruned(spark, e, band),
         histogram = None,
         tilesNonEmpty = Some(e => table.prunedFiles(e).nonEmpty),
@@ -237,11 +235,11 @@ object ZonalEngine {
   }
 
   /** @param exactPercentiles true (default) = exact numpy-parity
-    *   percentiles (concatenate+sort per group — the reference's
-    *   semantics, runner.py:823-904; a giant group's values land on
-    *   one reducer). false = Spark's mergeable Greenwald-Khanna
-    *   sketch (`percentile_approx`): map-side summaries, bounded
-    *   memory, no skewed reducer — the 100 TB scale path. */
+    *   percentiles (the reference's semantics, runner.py:823-904) by
+    *   two-pass [[RadixSelect]]: a second kernel sweep instead of any
+    *   value partials. false = Spark's mergeable Greenwald-Khanna
+    *   sketch (`percentile_approx`) or, with `histogram`, the
+    *   fixed-bin sketch: single sweep over persisted raw values. */
   /** @param lastWins false (default) = pair-join semantics: every
     *   overlapping zone receives the pixel (the reference's
     *   `polygons_might_overlap=True` disjoint-set mode). true =
@@ -289,18 +287,39 @@ object ZonalEngine {
     }
 
     val bc = spark.sparkContext.broadcast(idx)
-    // The decode+PIP kernel is the dominant cost: it must run exactly
-    // once. Per-fid stats are zone-cardinality small — cache THOSE and
-    // let every downstream consumer (fallback detection, rollup) read
-    // the small cache. The raw partials are only cached when the
-    // exact-percentile path needs their value chunks a second time.
+    // The decode+PIP kernel is the dominant cost: the stats (and the
+    // sketches' raw values) need exactly one sweep; exact percentiles
+    // take a second, value-filtered sweep instead of any value
+    // partials. Per-fid stats are zone-cardinality small — hold THOSE
+    // (driver-side for the exact sweeps, cached otherwise) and let
+    // every downstream consumer (fallback detection, rollup) read them.
     // Every persist/broadcast is registered for release once the
     // (dimension-sized) result has materialized — a long-lived session
     // must not depend on the ContextCleaner for block-manager hygiene.
     val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     releases += (() => bc.destroy())
+    val tilesFor = fallbackTiles.getOrElse(
+      (_: org.locationtech.jts.geom.Envelope) => tiles)
+    if (collectVals && exactPercentiles) {
+      // one job per sweep, folded per task; pass 1 carries the stats
+      def sweep(values: Values): Seq[FidPartial] =
+        ZonalStats.mergeFolded(ZonalStats.foldTiles(tiles,
+          ZonalStats.fidKernel(bc, grid, nodata, lastWins, values))
+          .iterator.flatMap(_._2)).map(_._2).sortBy(_.fid)
+      val pass1 = sweep(Values.Coarse)
+      val mainFidStats = ZonalStats.fidStatsFrame(spark, pass1.map(p =>
+        ZonalStats.FidStatRow(p.fid, p.cnt, p.nodata, p.mn, p.mx, p.sum,
+          p.sumsq)))
+      return finishStats(spark, mainFidStats,
+        Some(ExactPasses(pass1.map(p => p.fid -> p.hist),
+          fine => sweep(fine).map(p => p.fid -> p.hist))),
+        zones, zonesDf, grid, nodata, percentiles, tilesFor, histogram,
+        releases.toSeq, tilesNonEmpty = fallbackHasTiles)
+    }
     val partials0 = ZonalStats.tilePartials(tiles, bc, grid, nodata,
       collectVals, lastWins)
+    // raw partials are cached only when a sketch needs their value
+    // chunks a second time
     val partials =
       if (collectVals) {
         val p = partials0.persist(StorageLevel.MEMORY_AND_DISK)
@@ -314,19 +333,33 @@ object ZonalEngine {
 
     val mainChunks =
       if (!collectVals) None
-      else Some(partials.select($"fid", $"vals").where(size($"vals") > 0))
-    val tilesFor = fallbackTiles.getOrElse(
-      (_: org.locationtech.jts.geom.Envelope) => tiles)
+      else Some(RawChunks(partials.select($"fid", $"vals")
+        .where(size($"vals") > 0)))
     finishStats(spark, mainFidStats, mainChunks, zones, zonesDf, grid,
-      nodata, percentiles, exactPercentiles, tilesFor, histogram,
+      nodata, percentiles, tilesFor, histogram,
       releases.toSeq, tilesNonEmpty = fallbackHasTiles)
   }
 
+  /** The main kernel's share of the group percentiles, for
+    * [[finishStats]]. */
+  private[graft] sealed trait MainValues
+  /** Raw (fid, vals) chunks, for the sketches (GK or, with a
+    * `histogram`, fixed-bin). */
+  private[graft] final case class RawChunks(df: DataFrame)
+      extends MainValues
+  /** Exact percentiles: the main kernel's pass-1 histograms per fid,
+    * and its pass 2 for given target buckets. */
+  private[graft] final case class ExactPasses(coarse: Seq[(Long, Hist)],
+      fine: Values.Fine => Seq[(Long, Hist)]) extends MainValues
+
   /** The tail of the zonal pipeline, shared by the direct path above
     * and the checkpointed path ([[graft.engine.Checkpoints]]): given
-    * merged per-FID stats (and optional percentile value chunks) from
-    * the kernel stage, run the unset-FID envelope fallback, the group
-    * rollup + percentiles, finalize, and order the output columns.
+    * merged per-FID stats (and the main kernel's percentile inputs)
+    * from the kernel stage, run the unset-FID envelope fallback, the
+    * group rollup + percentiles, finalize, and order the output
+    * columns. Exact percentiles select per group on the driver
+    * between the two passes ([[RadixSelect.groupPercentiles]]); the
+    * fallback windows run both passes too.
     *
     * @param zones   the SIMPLIFIED zone set the kernel ran against
     * @param tilesFor envelope-pruned tile scan for the fallback pass
@@ -339,10 +372,9 @@ object ZonalEngine {
     *   fid set and skip the collect job — the per-increment finish
     *   tail is fixed overhead the growth-path ratio pays every day. */
   private[graft] def finishStats(spark: SparkSession,
-      mainFidStats: DataFrame, mainChunks: Option[DataFrame],
+      mainFidStats: DataFrame, mainValues: Option[MainValues],
       zones: Seq[Zone], zonesDf: DataFrame, grid: RasterGrid,
       nodata: Option[Double], percentiles: Seq[Double],
-      exactPercentiles: Boolean,
       tilesFor: org.locationtech.jts.geom.Envelope => DataFrame,
       histogram: Option[(Double, Double, Int)],
       releases: Seq[() => Unit] = Nil,
@@ -351,57 +383,8 @@ object ZonalEngine {
       presentFidsKnown: Option[Set[Long]] = None): DataFrame = {
     import spark.implicits._
     val pKeys = percentileKeys(percentiles)
-    val collectVals = mainChunks.isDefined
+    val pending = scala.collection.mutable.ArrayBuffer(releases: _*)
 
-    // ---- unset-FID envelope fallback (runner.py:697-811) ----
-    val tPh0 = System.nanoTime()
-    val presentFids = presentFidsKnown.getOrElse(
-      mainFidStats.select("fid").as[Long].collect().toSet)
-    val unset = zones.filter(z => !presentFids.contains(z.fid))
-    val tPh1 = System.nanoTime()
-    val (fallbackStats, fallbackChunks, fbReleases) =
-      if (unset.isEmpty) (None, None, Nil)
-      // manifest-prune short-circuit: when the caller can prove (from
-      // the driver-side file index, ~ms) that NO table file intersects
-      // the unset zones' envelope, the fallback scan would read zero
-      // tiles and produce zero partials — identical to the zero-stat
-      // fill groupStats applies downstream. Skipping the Spark jobs
-      // matters on the incremental path, where this consult is fixed
-      // per-increment overhead.
-      else if (tilesNonEmpty.exists(f => !f(Zone.totalEnvelope(unset))))
-        (None, None, Nil)
-      else runFallback(spark, tilesFor(Zone.totalEnvelope(unset)),
-        unset, grid, nodata, collectVals)
-    val tPh2 = System.nanoTime()
-    if (sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("1"))
-      System.err.println(f"PHASES finish_present=${(tPh1 - tPh0) / 1e9}%.3f" +
-        f" finish_fallback=${(tPh2 - tPh1) / 1e9}%.3f unset=${unset.size}")
-
-    val fidStatsAll = fallbackStats match {
-      case Some(fb) => mainFidStats.unionByName(fb)
-      case None => mainFidStats
-    }
-
-    val chunks = mainChunks.map { mc =>
-      val all = fallbackChunks match {
-        case Some(fc) => mc.unionByName(fc)
-        case None => mc
-      }
-      val withGroup = broadcast(zonesDf)
-        .join(all, Seq("fid")).select("group", "vals")
-      (withGroup, percentiles.toArray)
-    }
-
-    val g = ZonalStats.groupStats(fidStatsAll, zonesDf, chunks,
-      exactPercentiles, histogram)
-
-    // expand percentile array into pK columns; order columns
-    val withP =
-      if (pKeys.isEmpty) g
-      else pKeys.zipWithIndex.foldLeft(g) { case (df, (k, i)) =>
-        df.withColumn(k, element_at(col("pcts"), i + 1))
-      }.drop("pcts")
-    val ordered = withP.select("group", statFields(pKeys): _*)
     // The rollup output is group-cardinality (dimension-sized — the
     // same broadcastability assumption the whole engine makes), so
     // materialize it NOW and synchronously drop every cached
@@ -410,16 +393,92 @@ object ZonalEngine {
     // ContextCleaner happens to fire (under ParallelGC + a big heap:
     // possibly never), which accumulates across reps in a long-lived
     // session. The local result is also broadcast-friendly downstream.
-    // release in a finally: a failed collect (task failure, OOM) must
-    // not strand the persists/broadcasts in the block manager — that
-    // is exactly the accumulation this path exists to prevent
-    val rows =
-      try ordered.collect()
-      finally (releases ++ fbReleases).foreach { r =>
-        try r() catch { case scala.util.control.NonFatal(_) => () }
+    // Every Spark job below (fallback sweeps, percentile pass 2, the
+    // rollup collect) runs inside the try: a failed job (task failure,
+    // OOM) must not strand the persists/broadcasts in the block
+    // manager — that is exactly the accumulation this path exists to
+    // prevent
+    val (schema, rows) = try {
+      // ---- unset-FID envelope fallback (runner.py:697-811) ----
+      val tPh0 = System.nanoTime()
+      val presentFids = presentFidsKnown.getOrElse(
+        mainFidStats.select("fid").as[Long].collect().toSet)
+      val unset = zones.filter(z => !presentFids.contains(z.fid))
+      val tPh1 = System.nanoTime()
+      val fallback =
+        if (unset.isEmpty) None
+        // manifest-prune short-circuit: when the caller can prove (from
+        // the driver-side file index, ~ms) that NO table file
+        // intersects the unset zones' envelope, the fallback scan would
+        // read zero tiles and produce zero partials — identical to the
+        // zero-stat fill groupStats applies downstream. Skipping the
+        // Spark jobs matters on the incremental path, where this
+        // consult is fixed per-increment overhead.
+        else if (tilesNonEmpty.exists(f => !f(Zone.totalEnvelope(unset))))
+          None
+        else Fallback(spark, tilesFor(Zone.totalEnvelope(unset)), unset,
+          grid, nodata)
+      fallback.foreach(f => pending += (() => f.close()))
+      // the fallback's first sweep gathers what the main kernel's first
+      // sweep gathered
+      val fbParts = fallback.map(_.sweep(mainValues match {
+        case Some(_: RawChunks) => Values.Raw
+        case Some(_: ExactPasses) => Values.Coarse
+        case None => Values.Off
+      })).getOrElse(Nil)
+      val tPh2 = System.nanoTime()
+      if (sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("1"))
+        System.err.println(f"PHASES finish_present=${(tPh1 - tPh0) / 1e9}%.3f" +
+          f" finish_fallback=${(tPh2 - tPh1) / 1e9}%.3f unset=${unset.size}")
+
+      val fidStatsAll =
+        if (fallback.isEmpty) mainFidStats
+        else mainFidStats.unionByName(
+          ZonalStats.fidStatsFrame(spark, Fallback.stats(fbParts)))
+      val fbValues = Fallback.values(fbParts)
+
+      val g = mainValues match {
+        case None => ZonalStats.rollup(fidStatsAll, zonesDf, None)
+        case Some(RawChunks(mc)) =>
+          val fc = fbValues.filter(_.vals.nonEmpty)
+          val all =
+            if (fc.isEmpty) mc
+            else mc.unionByName(fc.map(p => (p.fid, p.vals))
+              .toDF("fid", "vals"))
+          val withGroup = broadcast(zonesDf)
+            .join(all, Seq("fid")).select("group", "vals")
+          ZonalStats.groupStats(fidStatsAll, zonesDf,
+            Some((withGroup, percentiles.toArray)),
+            exactPercentiles = false, histogram)
+        case Some(ExactPasses(coarse, fine)) =>
+          val groupsOf = zones.groupMap(_.fid)(_.group)
+          val pcts = RadixSelect.groupPercentiles[Long, String](
+            coarse ++ fbValues.map(p => p.fid -> p.hist),
+            fid => groupsOf.getOrElse(fid, Nil), percentiles.toArray,
+            targets => {
+              val bcT = spark.sparkContext.broadcast(targets)
+              try {
+                val mode = Values.Fine(bcT)
+                fine(mode) ++ fallback.toSeq.flatMap(f =>
+                  Fallback.values(f.sweep(mode)).map(p => p.fid -> p.hist))
+              } finally bcT.destroy()
+            })
+          ZonalStats.rollup(fidStatsAll, zonesDf,
+            Some(ZonalStats.percentileFrame(spark, pcts)))
       }
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), ordered.schema)
+
+      // expand percentile array into pK columns; order columns
+      val withP =
+        if (pKeys.isEmpty) g
+        else pKeys.zipWithIndex.foldLeft(g) { case (df, (k, i)) =>
+          df.withColumn(k, element_at(col("pcts"), i + 1))
+        }.drop("pcts")
+      val ordered = withP.select("group", statFields(pKeys): _*)
+      (ordered.schema, ordered.collect())
+    } finally pending.foreach { r =>
+      try r() catch { case scala.util.control.NonFatal(_) => () }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Zero-stats frame for the no-intersection path (runner.py:424-450). */
@@ -439,102 +498,96 @@ object ZonalEngine {
   /** Envelope-window fallback for zones that captured no pixel:
     * per PART of each multi-geometry, stats over the WHOLE clamped
     * envelope window (no PIP — a reference quirk), scalars overwritten
-    * so the LAST nonempty part wins; percentile chunks accumulate
-    * across parts (runner.py:700-811).
+    * so the LAST nonempty part wins; percentile values accumulate
+    * across parts (runner.py:700-811). Each [[sweep]] is one Spark job
+    * folding the per-(fid, part) partials inside its tasks; [[close]]
+    * releases the windows broadcast.
     */
-  private def runFallback(spark: SparkSession, tiles: DataFrame,
-      unset: Seq[Zone], grid: RasterGrid, nodata: Option[Double],
-      collectVals: Boolean)
-      : (Option[DataFrame], Option[DataFrame], Seq[() => Unit]) = {
-    import spark.implicits._
-
-    val windows: Array[(Long, Int, PixelWindow)] = (for {
-      z <- unset.iterator
-      part <- 0 until z.geom.getNumGeometries
-      env = z.geom.getGeometryN(part).getEnvelopeInternal
-      win = WindowMath.envelopeToWindow(env.getMinX, env.getMaxX,
-        env.getMinY, env.getMaxY, grid.gt, grid.widthPx, grid.heightPx)
-      if !win.isEmpty
-    } yield (z.fid, part, win)).toArray
-    if (windows.isEmpty) return (None, None, Nil)
-
-    // STRtree over the window pixel rects: the kernel probes the tile's
-    // pixel range instead of scanning every window linearly — fallback
-    // cost becomes O(tiles_touched × log windows), not O(tiles × windows)
-    val tree = new org.locationtech.jts.index.strtree.STRtree()
-    windows.zipWithIndex.foreach { case ((_, _, w), i) =>
-      tree.insert(new org.locationtech.jts.geom.Envelope(
-        w.xoff.toDouble, (w.xoff + w.wx).toDouble,
-        w.yoff.toDouble, (w.yoff + w.wy).toDouble), Int.box(i))
+  private final class Fallback(tiles: DataFrame, grid: RasterGrid,
+      nodata: Option[Double],
+      bcWin: org.apache.spark.broadcast.Broadcast[(Array[(Long, Int,
+        PixelWindow)], org.locationtech.jts.index.strtree.STRtree)]) {
+    def sweep(values: Values): Seq[((Long, Int), FidPartial)] = {
+      val (gridB, nodataB, bcB) = (grid, nodata, bcWin)
+      ZonalStats.mergeFolded(ZonalStats.foldTiles(tiles,
+        (id, bytes, fmt) => {
+          val (ws, t) = bcB.value
+          fallbackTileKernel(id, bytes, fmt, gridB, ws, t, nodataB, values)
+        }).iterator.flatMap(_._2))
     }
-    tree.build() // immutable + thread-safe for queries after build
+    def close(): Unit = bcWin.destroy()
+  }
 
-    val bcWin = spark.sparkContext.broadcast((windows, tree))
-    val gridB = grid
-    val nodataB = nodata
-    val cvB = collectVals
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    releases += (() => bcWin.destroy())
+  private object Fallback {
+    /** None when no unset zone's window intersects the raster. */
+    def apply(spark: SparkSession, tiles: DataFrame, unset: Seq[Zone],
+        grid: RasterGrid, nodata: Option[Double]): Option[Fallback] = {
+      val windows: Array[(Long, Int, PixelWindow)] = (for {
+        z <- unset.iterator
+        part <- 0 until z.geom.getNumGeometries
+        env = z.geom.getGeometryN(part).getEnvelopeInternal
+        win = WindowMath.envelopeToWindow(env.getMinX, env.getMaxX,
+          env.getMinY, env.getMaxY, grid.gt, grid.widthPx, grid.heightPx)
+        if !win.isEmpty
+      } yield (z.fid, part, win)).toArray
+      if (windows.isEmpty) return None
 
-    val winPartials0 = tiles.select("image_id", "bytes", "fmt")
-      .as[(String, Array[Byte], String)]
-      .flatMap { case (id, bytes, fmt) =>
-        val (ws, t) = bcWin.value
-        fallbackTileKernel(id, bytes, fmt, gridB, ws, t, nodataB, cvB)
+      // STRtree over the window pixel rects: the kernel probes the
+      // tile's pixel range instead of scanning every window linearly —
+      // fallback cost becomes O(tiles_touched × log windows), not
+      // O(tiles × windows)
+      val tree = new org.locationtech.jts.index.strtree.STRtree()
+      windows.zipWithIndex.foreach { case ((_, _, w), i) =>
+        tree.insert(new org.locationtech.jts.geom.Envelope(
+          w.xoff.toDouble, (w.xoff + w.wx).toDouble,
+          w.yoff.toDouble, (w.yoff + w.wy).toDouble), Int.box(i))
       }
-    // cache only when the percentile path re-reads the value chunks —
-    // the scalar-stats path consumes the kernel output exactly once
-    val winPartials =
-      if (collectVals) {
-        val w = winPartials0.persist(StorageLevel.MEMORY_AND_DISK)
-        releases += (() => { w.unpersist(false); () })
-        w
-      } else winPartials0
+      tree.build() // immutable + thread-safe for queries after build
+      Some(new Fallback(tiles, grid, nodata,
+        spark.sparkContext.broadcast((windows, tree))))
+    }
 
-    val agg = winPartials.groupBy("fid", "part").agg(
-      sum("cnt").as("cnt"), sum("nodata").as("nodata"),
-      min("mn").as("mn"), max("mx").as("mx"),
-      sum("sum").as("sum"), sum("sumsq").as("sumsq"))
-      .collect()
+    /** Per-fid scalars: the LAST nonempty part wins (runner.py:783-806
+      * uses `=`, not `+=`); an all-nodata part zeroes the sums
+      * (runner.py:790-794). */
+    def stats(parts: Seq[((Long, Int), FidPartial)])
+        : Seq[ZonalStats.FidStatRow] =
+      parts.groupBy(_._1._1).toSeq.map { case (fid, ps) =>
+        val last = ps.maxBy(_._1._2)._2
+        if (last.cnt - last.nodata == 0)
+          ZonalStats.FidStatRow(fid, last.cnt, last.nodata, 0.0, 0.0, 0.0,
+            0.0)
+        else ZonalStats.FidStatRow(fid, last.cnt, last.nodata, last.mn,
+          last.mx, last.sum, last.sumsq)
+      }
 
-    // last-part-wins merge (runner.py:783-806 uses `=`, not `+=`)
-    val byFid = agg.groupBy(_.getLong(0))
-    val rows = byFid.map { case (fid, parts) =>
-      val last = parts.maxBy(_.getInt(1))
-      val cnt = last.getLong(2); val nd = last.getLong(3)
-      val valid = cnt - nd
-      if (valid == 0)
-        (fid, cnt, nd, 0.0, 0.0, 0.0, 0.0) // runner.py:790-794
-      else
-        (fid, cnt, nd, last.getDouble(4), last.getDouble(5),
-          last.getDouble(6), last.getDouble(7))
-    }.toSeq
-    val fbStats = rows.toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq")
-
-    val fbChunks =
-      if (!collectVals) None
-      else Some(winPartials.select($"fid", $"vals")
-        .where(size($"vals") > 0))
-    (Some(fbStats), fbChunks, releases.toSeq)
+    /** Per-fid values (raw or histograms), accumulated across parts. */
+    def values(parts: Seq[((Long, Int), FidPartial)]): Seq[FidPartial] =
+      ZonalStats.mergeFolded(parts.sortBy(_._1)
+        .map { case ((fid, _), p) => fid -> p }).map(_._2)
   }
 
   /** Per-tile kernel of the fallback pass: every pixel of the tile
     * that falls in a (fid, part) window contributes — no PIP. Windows
-    * are probed through the broadcast STRtree keyed on pixel rects. */
+    * are probed through the broadcast STRtree keyed on pixel rects.
+    * Partials are keyed by (fid, part). */
   def fallbackTileKernel(imageId: String, bytes: Array[Byte], fmt: String,
       grid: RasterGrid, windows: Array[(Long, Int, PixelWindow)],
       tree: org.locationtech.jts.index.strtree.STRtree,
-      nodata: Option[Double], collectVals: Boolean): Iterator[WinPartial] = {
+      nodata: Option[Double],
+      values: Values): Iterator[((Long, Int), FidPartial)] = {
     val (tr, tc) = ZonalStats.parseTileId(imageId)
     val col0 = tc * grid.tileW; val row0 = tr * grid.tileH
     val col1 = col0 + grid.tileW - 1; val row1 = row0 + grid.tileH - 1
     var px: Array[Float] = null
-    val out = scala.collection.mutable.ArrayBuffer.empty[WinPartial]
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[((Long, Int), FidPartial)]
     // loop-invariant nodata predicate (same isclose formula — see
     // ZonalStats.processTile)
     val ndDef = nodata.isDefined
     val ndVal = if (ndDef) nodata.get else 0.0
     val ndTol = 1e-8 + 1e-5 * math.abs(ndVal)
+    val vals = if (values eq Values.Off) null else new FloatBuf(16)
 
     val cands = tree.query(new org.locationtech.jts.geom.Envelope(
       col0.toDouble, (col1 + 1).toDouble,
@@ -552,8 +605,7 @@ object ZonalEngine {
         var cnt = 0L; var nd = 0L
         var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
         var sum = 0.0; var sumsq = 0.0
-        val vals = if (collectVals)
-          new scala.collection.mutable.ArrayBuffer[Float](16) else null
+        if (vals != null) vals.clear()
         var gr = gr0
         while (gr <= gr1) {
           val rowBase = (gr - row0) * grid.tileW - col0
@@ -569,14 +621,15 @@ object ZonalEngine {
               if (vd > mx) mx = vd
               sum += vd
               sumsq += (v * v).toDouble
-              if (vals != null) vals += v
+              if (vals != null) vals.add(v)
             }
             gc += 1
           }
           gr += 1
         }
-        out += WinPartial(fid, part, cnt, nd, mn, mx, sum, sumsq,
-          if (vals == null) Array.empty[Float] else vals.toArray)
+        val (raw, hist) = values.summarize(vals, fid)
+        out += ((fid, part) -> FidPartial(fid, cnt, nd, mn, mx, sum, sumsq,
+          raw, hist))
       }
       ci += 1
     }

@@ -17,10 +17,43 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * `mn`/`mx` use ±Infinity sentinels when the tile contributed no
   * valid pixel (finalized to NULL later, matching the reference's
   * `None` min/max). `vals` carries the valid float32 pixel values for
-  * the exact-percentile path and is empty when percentiles are off.
+  * the sketch percentile paths ([[Values.Raw]]); `hist` the
+  * [[RadixSelect]] pass summary of the exact path ([[Values.Coarse]],
+  * [[Values.Fine]]). Both are empty when percentiles are off.
   */
 final case class FidPartial(fid: Long, cnt: Long, nodata: Long,
-    mn: Double, mx: Double, sum: Double, sumsq: Double, vals: Array[Float])
+    mn: Double, mx: Double, sum: Double, sumsq: Double, vals: Array[Float],
+    hist: Hist = Hist.Empty)
+
+/** Mutable fold of kernel partials sharing a key: the algebraic stats
+  * monoid, raw values concatenated, histograms summed. */
+private[graft] final class PartialAcc {
+  private var fid = 0L
+  private var cnt = 0L; private var nd = 0L
+  private var mn = Double.PositiveInfinity
+  private var mx = Double.NegativeInfinity
+  private var sum = 0.0; private var sumsq = 0.0
+  private var vals: FloatBuf = null
+  private var hist: HistAcc = null
+  def add(p: FidPartial): this.type = {
+    fid = p.fid
+    cnt += p.cnt; nd += p.nodata
+    mn = math.min(mn, p.mn); mx = math.max(mx, p.mx)
+    sum += p.sum; sumsq += p.sumsq
+    if (p.vals.nonEmpty) {
+      if (vals == null) vals = new FloatBuf(p.vals.length)
+      vals.addAll(p.vals)
+    }
+    if (!p.hist.isEmpty) {
+      if (hist == null) hist = new HistAcc
+      hist.add(p.hist)
+    }
+    this
+  }
+  def result: FidPartial = FidPartial(fid, cnt, nd, mn, mx, sum,
+    sumsq, if (vals == null) Array.emptyFloatArray else vals.toArray,
+    if (hist == null) Hist.Empty else hist.result)
+}
 
 /** Pixel→zone assignment + zonal aggregation over a tile table.
   *
@@ -57,7 +90,13 @@ object ZonalStats {
   // the dominant case for continent-sized zones.
   def processTile(imageId: String, bytes: Array[Byte], fmt: String,
       grid: RasterGrid, idx: ZoneIndex, nodata: Option[Double],
-      collectValues: Boolean): Iterator[FidPartial] = {
+      collectValues: Boolean): Iterator[FidPartial] =
+    processTile(imageId, bytes, fmt, grid, idx, nodata,
+      if (collectValues) Values.Raw else Values.Off)
+
+  def processTile(imageId: String, bytes: Array[Byte], fmt: String,
+      grid: RasterGrid, idx: ZoneIndex, nodata: Option[Double],
+      values: Values): Iterator[FidPartial] = {
     val (tr, tc) = parseTileId(imageId)
     val env = grid.tileEnvelope(tr, tc)
     val cands = idx.candidates(env)
@@ -73,6 +112,8 @@ object ZonalStats {
     val ndDef = nodata.isDefined
     val ndVal = if (ndDef) nodata.get else 0.0
     val ndTol = 1e-8 + 1e-5 * math.abs(ndVal)
+    // one value buffer per tile, refilled per zone
+    val vals = if (values eq Values.Off) null else new FloatBuf()
 
     var ci = 0
     while (ci < cands.length) {
@@ -96,8 +137,7 @@ object ZonalStats {
         var cnt = 0L; var nd = 0L
         var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
         var sum = 0.0; var sumsq = 0.0
-        val vals = if (collectValues)
-          new scala.collection.mutable.ArrayBuffer[Float](64) else null
+        if (vals != null) vals.clear()
 
         val x0g = grid.gt.x0; val pxw = grid.gt.px
         var gr = gr0
@@ -124,7 +164,7 @@ object ZonalStats {
                 // reference squares in the block dtype (float32) and
                 // accumulates float64 (`runner.py:682-685`)
                 sumsq += (v * v).toDouble
-                if (vals != null) vals += v
+                if (vals != null) vals.add(v)
               }
               gc += 1
             }
@@ -154,8 +194,8 @@ object ZonalStats {
           gr += 1
         }
         if (cnt > 0) {
-          out += FidPartial(zone.fid, cnt, nd, mn, mx, sum, sumsq,
-            if (vals == null) Array.empty[Float] else vals.toArray)
+          val (raw, hist) = values.summarize(vals, zone.fid)
+          out += FidPartial(zone.fid, cnt, nd, mn, mx, sum, sumsq, raw, hist)
         }
       }
       ci += 1
@@ -173,7 +213,13 @@ object ZonalStats {
     */
   def processTileLastWins(imageId: String, bytes: Array[Byte], fmt: String,
       grid: RasterGrid, idx: ZoneIndex, nodata: Option[Double],
-      collectValues: Boolean): Iterator[FidPartial] = {
+      collectValues: Boolean): Iterator[FidPartial] =
+    processTileLastWins(imageId, bytes, fmt, grid, idx, nodata,
+      if (collectValues) Values.Raw else Values.Off)
+
+  def processTileLastWins(imageId: String, bytes: Array[Byte], fmt: String,
+      grid: RasterGrid, idx: ZoneIndex, nodata: Option[Double],
+      values: Values): Iterator[FidPartial] = {
     val (tr, tc) = parseTileId(imageId)
     val env = grid.tileEnvelope(tr, tc)
     val cands = idx.candidates(env) // ascending zone index = burn order
@@ -247,7 +293,7 @@ object ZonalStats {
       val zi = owner(i)
       if (zi >= 0) {
         var a = accByZi(zi)
-        if (a == null) { a = new Acc(collectValues); accByZi(zi) = a }
+        if (a == null) { a = new Acc(values ne Values.Off); accByZi(zi) = a }
         a.add(px(i), ndDef, ndVal, ndTol)
       }
       i += 1
@@ -258,21 +304,21 @@ object ZonalStats {
       val zi = cands(ci)
       val a = accByZi(zi)
       if (a != null) {
-        out += FidPartial(idx.zones(zi).fid, a.cnt, a.nd, a.mn, a.mx,
-          a.sum, a.sumsq,
-          if (a.vals == null) Array.empty[Float] else a.vals.toArray)
+        val fid = idx.zones(zi).fid
+        val (raw, hist) = values.summarize(a.vals, fid)
+        out += FidPartial(fid, a.cnt, a.nd, a.mn, a.mx, a.sum, a.sumsq,
+          raw, hist)
       }
       ci += 1
     }
     out.iterator
   }
 
-  private final class Acc(collectValues: Boolean) {
+  private final class Acc(gatherValues: Boolean) {
     var cnt = 0L; var nd = 0L
     var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
     var sum = 0.0; var sumsq = 0.0
-    val vals = if (collectValues)
-      new scala.collection.mutable.ArrayBuffer[Float](64) else null
+    val vals = if (gatherValues) new FloatBuf() else null
     def add(v: Float, ndDef: Boolean, ndVal: Double,
         ndTol: Double): Unit = {
       cnt += 1
@@ -283,7 +329,7 @@ object ZonalStats {
         if (vd > mx) mx = vd
         sum += vd
         sumsq += (v * v).toDouble
-        if (vals != null) vals += v
+        if (vals != null) vals.add(v)
       }
     }
   }
@@ -305,6 +351,50 @@ object ZonalStats {
     tiles.select(toCol(graft.functions.ZonalPartialsGen(
       toExpr(tiles("image_id")), toExpr(tiles("bytes")),
       toExpr(tiles("fmt")), grid, bc, nodata, collectValues, lastWins)))
+  }
+
+  /** The zonal kernel over one tile, keyed by fid. */
+  private[graft] def fidKernel(bc: Broadcast[ZoneIndex], grid: RasterGrid,
+      nodata: Option[Double], lastWins: Boolean, values: Values)
+      : (String, Array[Byte], String) => Iterator[(Long, FidPartial)] =
+    (id, bytes, fmt) => {
+      val it =
+        if (lastWins)
+          processTileLastWins(id, bytes, fmt, grid, bc.value, nodata, values)
+        else processTile(id, bytes, fmt, grid, bc.value, nodata, values)
+      it.map(p => p.fid -> p)
+    }
+
+  /** Runs `kernel` over every tile of `tiles` (columns image_id, bytes,
+    * fmt) in ONE Spark job and folds its partials per key inside each
+    * task, in tile order. The driver gets, per scan partition in
+    * partition order, the number of partials folded and the folded
+    * (key, partial) pairs — no shuffle, and zone-sized (or, with
+    * histograms, zone × bucket-sized) results per task. */
+  private[graft] def foldTiles[K](tiles: DataFrame,
+      kernel: (String, Array[Byte], String) => Iterator[(K, FidPartial)])
+      : Array[(Long, Seq[(K, FidPartial)])] =
+    tiles.select("image_id", "bytes", "fmt").queryExecution.toRdd
+      .mapPartitions { rows =>
+        var n = 0L
+        val folded = mergeFolded(rows.flatMap { r =>
+          kernel(r.getUTF8String(0).toString, r.getBinary(1),
+            r.getUTF8String(2).toString)
+        }.map { kp => n += 1; kp })
+        Iterator[(Long, Seq[(K, FidPartial)])]((n, folded))
+      }.collect()
+
+  /** Fold partials per key in stream order (tile order inside a task,
+    * then partition order for [[foldTiles]] output, chunk order for
+    * checkpoints) — a fixed float64 summation order, so reruns are
+    * bit-identical. Keys keep their first-seen order. */
+  private[graft] def mergeFolded[K](partials: IterableOnce[(K, FidPartial)])
+      : Seq[(K, FidPartial)] = {
+    val acc = scala.collection.mutable.LinkedHashMap.empty[K, PartialAcc]
+    partials.iterator.foreach { case (k, p) =>
+      acc.getOrElseUpdate(k, new PartialAcc).add(p)
+    }
+    acc.iterator.map { case (k, a) => k -> a.result }.toVector
   }
 
   /** Per-FID statistics (the reference's `aggregate_stats` dict,
@@ -456,36 +546,17 @@ object ZonalStats {
     * appears (zero-filled) even with no pixels.
     *
     * `zonesDf` is (fid, group) — broadcast by size. `chunks` is the
-    * optional (fid, vals) stream feeding exact group percentiles.
+    * optional (group, vals) stream feeding group percentiles: exact
+    * ([[RadixSelect]]: two passes over the stream, O(groups × buckets)
+    * on the driver), or one of the scale sketches.
     */
   def groupStats(fidStatsDf: DataFrame, zonesDf: DataFrame,
       chunks: Option[(DataFrame, Array[Double])],
       exactPercentiles: Boolean = true,
-      histogram: Option[(Double, Double, Int)] = None): DataFrame = {
-    // Inner join fid→group: zones broadcast (BuildRight is supported
-    // for inner joins); fids with no stats are restored by the
-    // zero-fill below, which adds exactly the zeros the reference's
-    // defaultdict touch adds (runner.py:813-815) — sums/counts are
-    // unaffected and min/max are gated on valid_count anyway.
-    val joined = fidStatsDf.join(broadcast(zonesDf), Seq("fid"))
-    val validFid = col("cnt") - col("nodata")
-    var g = joined.groupBy("group").agg(
-      sum(col("cnt")).as("count"),
-      sum(col("nodata")).as("nodata_count"),
-      sum(col("sum")).as("sum"),
-      sum(col("sumsq")).as("sumsq"),
-      min(when(validFid > 0, col("mn"))).as("min"),
-      max(when(validFid > 0, col("mx"))).as("max"))
-
-    chunks.foreach { case (chunkDf, ps) =>
-      // rename the join key: both frames descend from zonesDf's group
-      // attribute, and a same-lineage <=> join resolves ambiguously.
-      // null-safe join: a NULL group value is a real group
-      // (runner.py:981-985).
-      val pcts = (if (exactPercentiles) {
-        val agg = udaf(new PercentileAgg(ps))
-        chunkDf.groupBy("group").agg(agg(col("vals")).as("pcts"))
-      } else if (histogram.isDefined) {
+      histogram: Option[(Double, Double, Int)] = None): DataFrame =
+    rollup(fidStatsDf, zonesDf, chunks.map { case (chunkDf, ps) =>
+      if (exactPercentiles) exactPercentileFrame(chunkDf, ps)
+      else if (histogram.isDefined) {
         // deterministic mergeable scale path: fixed-bin histogram.
         // Pixel rows fold into (group, bin) counts map-side (hash agg
         // partials), so only bins-per-group rows shuffle; the result
@@ -529,9 +600,82 @@ object ZonalStats {
           .groupBy("group")
           .agg(percentile_approx(col("v").cast("double"), fractions,
             lit(10000)).as("pcts"))
-      }).withColumnRenamed("group", "p_group")
-      g = g.join(pcts, col("group") <=> col("p_group"), "left_outer")
-        .drop("p_group")
+      }
+    })
+
+  /** Exact group percentiles of a (group, vals) frame: both
+    * [[RadixSelect]] passes fold the value arrays per group inside the
+    * tasks, so only per-group bucket counts reach the driver. */
+  private def exactPercentileFrame(chunkDf: DataFrame,
+      ps: Array[Double]): DataFrame = {
+    val rows = chunkDf.select(col("group").cast("string"), col("vals"))
+    // each pass returns per-partition histograms; groupPercentiles
+    // sums a group's repeated entries
+    def pass(summarize: (Option[String], Array[Float]) => Hist)
+        : Seq[(Option[String], Hist)] =
+      rows.queryExecution.toRdd.mapPartitions { it =>
+        val acc = scala.collection.mutable.HashMap
+          .empty[Option[String], HistAcc]
+        it.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val g = if (r.isNullAt(0)) None
+              else Some(r.getUTF8String(0).toString)
+            acc.getOrElseUpdate(g, new HistAcc)
+              .add(summarize(g, r.getArray(1).toFloatArray()))
+          }
+        }
+        acc.iterator.map { case (g, h) => g -> h.result }
+      }.collect().toSeq
+    val spark = chunkDf.sparkSession
+    percentileFrame(spark, RadixSelect.groupPercentiles[Option[String],
+        Option[String]](
+      pass((_, v) => RadixSelect.coarse(v, v.length)), Seq(_), ps,
+      targets => {
+        val bcT = spark.sparkContext.broadcast(targets)
+        try pass((g, v) => RadixSelect.fine(v, v.length,
+          bcT.value.getOrElse(g, null)))
+        finally bcT.destroy()
+      }).map { case (g, p) => g.orNull -> p })
+  }
+
+  /** (group, pcts) rows as the frame [[rollup]] joins. */
+  private[graft] def percentileFrame(spark: SparkSession,
+      rows: Seq[(String, Array[Double])]): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (g, p) =>
+        org.apache.spark.sql.Row(g, p.toSeq) }: _*),
+      StructType(Seq(StructField("group", StringType, nullable = true),
+        StructField("pcts", ArrayType(DoubleType, containsNull = false),
+          nullable = true))))
+  }
+
+  /** [[groupStats]] given finished group percentiles: a (group, pcts)
+    * frame, left-joined null-safe on group. */
+  private[graft] def rollup(fidStatsDf: DataFrame, zonesDf: DataFrame,
+      pcts: Option[DataFrame]): DataFrame = {
+    // Inner join fid→group: zones broadcast (BuildRight is supported
+    // for inner joins); fids with no stats are restored by the
+    // zero-fill below, which adds exactly the zeros the reference's
+    // defaultdict touch adds (runner.py:813-815) — sums/counts are
+    // unaffected and min/max are gated on valid_count anyway.
+    val joined = fidStatsDf.join(broadcast(zonesDf), Seq("fid"))
+    val validFid = col("cnt") - col("nodata")
+    var g = joined.groupBy("group").agg(
+      sum(col("cnt")).as("count"),
+      sum(col("nodata")).as("nodata_count"),
+      sum(col("sum")).as("sum"),
+      sum(col("sumsq")).as("sumsq"),
+      min(when(validFid > 0, col("mn"))).as("min"),
+      max(when(validFid > 0, col("mx"))).as("max"))
+
+    pcts.foreach { pf =>
+      // rename the join key: both frames descend from zonesDf's group
+      // attribute, and a same-lineage <=> join resolves ambiguously.
+      // null-safe join: a NULL group value is a real group
+      // (runner.py:981-985).
+      g = g.join(pf.withColumnRenamed("group", "p_group"),
+        col("group") <=> col("p_group"), "left_outer").drop("p_group")
     }
 
     // zero-fill: every group in the zone table appears (runner.py:424-450,

@@ -6,6 +6,7 @@ import graft.sources.TileTable
 import graft.synth.Synth
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end job parity: INI config → multi-raster zonal job → CSV
   * bytes compared against a CSV rendered from the single-threaded
@@ -101,6 +102,55 @@ class JobCsvSpec extends SparkSpec {
     }
     assert(Checkpoints.lineageRunId(ckpt, nChunks - 1) !==
       run1Ids(nChunks - 1))
+  }
+
+  test("job crash-resume across percentile passes: only the lost pass-2 " +
+      "chunk is redone, and no pixel values reach the checkpoint dir") {
+    val work = Files.createTempDirectory("graft-job-resume2")
+    TileTable.write(spark, Synth.tiles(spark, grid, "raw", 0), grid,
+      Some(-9999.0), s"$work/rasterA", cellLevel = 8, numFiles = 4)
+    val vecDir = Files.createDirectory(work.resolve("vec"))
+    ZoneStore.write(spark, Fixtures.zonesBasic(grid), "grp_field",
+      s"$vecDir/zones.parquet")
+    val job = Config.JobSpec(
+      tag = "t1", aggVector = s"$vecDir/zones.parquet",
+      aggLayer = "zones", aggField = "grp_field",
+      rasterPaths = Seq(s"$work/rasterA"),
+      operations = Seq("avg", "p5", "p95"),
+      rowColOrder = "agg_field,base_raster", workdir = s"$work/wd",
+      outputCsv = s"$work/out.csv")
+
+    val csv1 = Files.readString(Paths.get(ZonalJob.run(spark, job, None)))
+    val ckpt = ZonalJob.ckptDirFor(job, s"$work/rasterA")
+    val pass2 = Checkpoints.pass2Dir(ckpt)
+    val nChunks = Checkpoints.chunkFiles(
+      TileTable.open(s"$work/rasterA").manifest.files,
+      Checkpoints.DefaultMaxChunks).size
+    assert(nChunks >= 2)
+    val pass1Ids = (0 until nChunks).map(Checkpoints.lineageRunId(ckpt, _))
+    val pass2Ids = (0 until nChunks).map(Checkpoints.lineageRunId(pass2, _))
+    assert((pass1Ids ++ pass2Ids).forall(_.isDefined))
+    val walk = Files.walk(Paths.get(ckpt))
+    try assert(!walk.iterator().asScala.exists(_.toString.endsWith(".parquet")),
+      "value partials persisted under the checkpoint dir")
+    finally walk.close()
+
+    // crash between the passes' last chunks: pass 1 complete, the last
+    // pass-2 chunk lost, no CSV
+    Files.deleteIfExists(Paths.get(job.outputCsv))
+    Checkpoints.deleteRecursively(
+      Paths.get(Checkpoints.chunkDir(pass2, nChunks - 1)))
+
+    val csv2 = Files.readString(Paths.get(ZonalJob.run(spark, job, None)))
+    assert(csv2 === csv1, "resumed CSV differs from the original run")
+    (0 until nChunks).foreach { i =>
+      assert(Checkpoints.lineageRunId(ckpt, i) === pass1Ids(i), s"pass 1 chunk $i")
+    }
+    (0 until nChunks - 1).foreach { i =>
+      assert(Checkpoints.lineageRunId(pass2, i) === pass2Ids(i), s"pass 2 chunk $i")
+    }
+    assert(Checkpoints.lineageRunId(pass2, nChunks - 1) !==
+      pass2Ids(nChunks - 1))
   }
 
   test("job-level memoization: unchanged inputs skip, changed inputs rerun") {

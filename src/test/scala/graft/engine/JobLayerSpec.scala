@@ -351,6 +351,43 @@ class CheckpointSpec extends SparkSpec {
     assert(rows === Map("a" -> 0L, "b" -> 0L))
   }
 
+  test("an old-format checkpoint (value partials parquet) is recomputed, " +
+      "never merged") {
+    val grid = Synth.testGrid
+    val root = Files.createTempDirectory("graft-ct5").toString
+    val ckpt = Files.createTempDirectory("graft-ck5").toString
+    TileTable.write(spark, Synth.tiles(spark, grid), grid, Some(-9999.0),
+      root, cellLevel = 8, numFiles = 2)
+    val table = TileTable.open(root)
+    val zones = Fixtures.zonesBasic(grid)
+    // the chunk dir format 1 left behind: lineage whose fingerprint is
+    // the legacy digest of these very inputs, beside bogus partials
+    val simpl = zones.map(z => z.copy(geom =
+      graft.geom.Zone.simplifyHalfPixel(z.geom, grid.gt.px)))
+    val files = Checkpoints.chunkFiles(table.prunedFiles(
+      graft.geom.Zone.totalEnvelope(simpl)), Checkpoints.DefaultMaxChunks)
+    val dir = Paths.get(Checkpoints.chunkDir(ckpt, 0))
+    Files.createDirectories(dir)
+    val legacyFp = Checkpoints.fingerprint(Checkpoints.contextDigest(simpl,
+      table.manifest, collectValues = true, format = 1), files.head, root)
+    Files.writeString(dir.resolve("lineage.json"),
+      s"""{"chunk":0,"fingerprint":"$legacyFp","runId":"legacy"}""")
+    import spark.implicits._
+    Seq((1L, 1000000L, 0L, -5.0, 5000.0, 1e9, 1e12, Array(5000.0f)))
+      .toDF("fid", "cnt", "nodata", "mn", "mx", "sum", "sumsq", "vals")
+      .write.parquet(dir.resolve("partials").toString)
+
+    val res = Checkpoints.resumableZonalStats(spark, table, zones, ckpt,
+      runId = "fresh", percentiles = Seq(5.0, 95.0))
+    assert(Checkpoints.lineageRunId(ckpt, 0) === Some("fresh"))
+    assert(!Files.exists(dir.resolve("partials")))
+    val direct = graft.operators.ZonalEngine.run(spark, table.read(spark),
+      zones, grid, Some(-9999.0), Seq(5.0, 95.0))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(res) === rows(direct))
+  }
+
   test("context digest is sensitive to nodata/grid/band/zone changes") {
     val grid = Synth.testGrid
     val zones = Fixtures.zonesBasic(grid)
